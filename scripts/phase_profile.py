@@ -83,14 +83,8 @@ def main() -> None:
     from bench import ensure_transcripts, new_session
 
     from sqlite_otel_spark.config import PipelineConfig
-    from sqlite_otel_spark.operators import aggregates as agg_ops
     from sqlite_otel_spark.operators.aggregates import sink_counts
-    from sqlite_otel_spark.operators.conflicts import (
-        drop_conflicted,
-        resolve_span_conflicts,
-    )
-    from sqlite_otel_spark.operators.dims import enrich_record_ids
-    from sqlite_otel_spark.operators.records import to_records
+    from sqlite_otel_spark.operators.conflicts import resolve_span_conflicts
     from sqlite_otel_spark.plans import pipeline as plan
     from sqlite_otel_spark.plans.pipeline import collect_aggregates, run_pipeline
 
@@ -113,10 +107,8 @@ def main() -> None:
     from pyspark.storagelevel import StorageLevel
 
     src = plan.salted_repartition(df, cfg, rep)
-    records = enrich_record_ids(
-        to_records(src, cfg.max_text_bytes, emit_text=False),
-        cfg.surrogate_id_mode,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    records = plan.parse_records(src, cfg, cfg.surrogate_id_mode).persist(
+        StorageLevel.MEMORY_AND_DISK)
     ph.run("parse_cache_build", lambda: records.count())
 
     # --- phase 2: span-conflict resolution (groupBy over cache) ---
@@ -128,32 +120,18 @@ def main() -> None:
     def fanout():
         from concurrent.futures import ThreadPoolExecutor
 
-        valid = drop_conflicted(records, invalid)
         import sqlite_otel_spark.operators.facts as facts_ops
-        from sqlite_otel_spark.operators.dims import (
-            build_metric_defs,
-            build_resources,
-            build_scopes,
-        )
+        from sqlite_otel_spark.operators.dims import DIM_TOUCH_TABLES, fold_dims
         from sqlite_otel_spark.operators.enrich import enrich, role_dim, tool_dim
 
-        resources = build_resources(valid, cfg.surrogate_id_mode)
-        scopes = build_scopes(valid, cfg.surrogate_id_mode)
-        metric_defs = build_metric_defs(valid, resources, scopes, cfg.surrogate_id_mode)
-        sinks = {
-            "resources": resources,
-            "instrumentation_scopes": scopes,
-            "metrics": metric_defs,
-            "spans": facts_ops.build_spans(valid, resources, scopes, cfg.surrogate_id_mode),
-            "log_records": facts_ops.build_log_records(valid, resources, scopes, cfg.surrogate_id_mode),
-            "metric_data_points": facts_ops.build_points(valid, resources, scopes, metric_defs, cfg.surrogate_id_mode),
-            "rejects": facts_ops.build_rejects(records),
-        }
+        valid, frames = plan.emit_sinks(records, invalid, cfg.surrogate_id_mode)
+        touches = {t: frames.pop(t) for t in DIM_TOUCH_TABLES}
+        sinks = {**fold_dims(touches, cfg.surrogate_id_mode), **frames}
         routed = enrich(facts_ops.build_routed(valid), role_dim(spark), tool_dim(spark))
-        fused = agg_ops.fused_rollup(routed)
+        res = plan.PipelineResult(sinks, routed, None, None, None)
         with ThreadPoolExecutor(max_workers=2) as pool:
             a = pool.submit(sink_counts, sinks)
-            b = pool.submit(lambda: fused.collect())
+            b = pool.submit(collect_aggregates, res)
             a.result()
             b.result()
 

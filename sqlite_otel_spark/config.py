@@ -7,7 +7,7 @@ mandated by the north rule (salting, AQE, broadcast dims, checkpointing).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -45,12 +45,6 @@ class PipelineConfig:
 
     # Salted repartition of hot conversations (north_rule; SURVEY §4.2.1).
     salt_buckets: int = 8
-    # Number of shuffle partitions hint; None -> leave session default.
-    shuffle_partitions: int | None = None
-
-    # A5 retention analogue (logging/rotation.go:113-195): top-K newest.
-    retention_top_k: int = 7
-    retention_max_age_days: int = 30
 
     # Checkpoint/lineage (SURVEY §4.2.4): number of resumable input buckets,
     # and how many bucket pipelines the driver submits concurrently
@@ -101,12 +95,3 @@ class PipelineConfig:
     # directory level; dimension sinks stay unpartitioned (tiny). Off by
     # default: the sandbox correctness surface compares whole sinks.
     partition_facts_by_day: bool = False
-
-    # Per-sink malformed-row policy (F7): traces/metrics are lenient at the
-    # envelope level but any record error fails the whole turn; logs are
-    # strict end-to-end. These are fixed semantics of the reference
-    # (database/logs.go:24-74 vs database/traces.go:24-43), kept here only
-    # for visibility/documentation.
-    policies: dict = field(
-        default_factory=lambda: {"trace": "lenient", "log": "strict", "metric": "lenient"}
-    )

@@ -51,59 +51,115 @@ def metric_id_expr(name: Column, metric_type: Column, rid: Column, sid: Column) 
     return F.xxhash64(F.lit("metric"), name, metric_type, rid, sid)
 
 
-def build_resources(records: DataFrame, mode: str = "hash") -> DataFrame:
-    """resources(id, attributes, schema_url) — db.go:63-67. Input is the
-    flat record stream (operators/records.py); dimension touches are the
-    rec_kind='resource' rows."""
-    touched = (
-        records.filter(F.col("rec_kind") == "resource")
-        .select(
-            F.col("res_attributes").alias("attributes"),
-            F.col("res_schema_url").alias("schema_url"),
-        )
-        .dropDuplicates(["attributes", "schema_url"])
-    )
-    if mode == "hash":
-        return touched.select(
-            F.xxhash64(F.lit("res"), "attributes", "schema_url").alias("id"),
-            "attributes",
-            "schema_url",
-        )
-    w = Window.orderBy("attributes", "schema_url")  # tiny dim: bounded window
-    return touched.select(
-        F.row_number().over(w).cast("long").alias("id"), "attributes", "schema_url"
-    )
-
-
-def build_scopes(records: DataFrame, mode: str = "hash") -> DataFrame:
-    """instrumentation_scopes(id, name, version, attributes, schema_url)
-    — db.go:70-76."""
-    touched = (
-        records.filter(F.col("rec_kind") == "scope")
-        .select(
-            F.col("scope_name").alias("name"),
-            F.col("scope_version").alias("version"),
-            F.col("scope_attributes").alias("attributes"),
-            F.col("scope_schema_url").alias("schema_url"),
-        )
-        .dropDuplicates(["name", "version", "attributes", "schema_url"])
-    )
-    if mode == "hash":
-        return touched.select(
-            F.xxhash64(F.lit("scope"), "name", "version", "attributes", "schema_url").alias("id"),
-            "name", "version", "attributes", "schema_url",
-        )
-    w = Window.orderBy("name", "version", "attributes", "schema_url")
-    return touched.select(
-        F.row_number().over(w).cast("long").alias("id"),
-        "name", "version", "attributes", "schema_url",
-    )
-
-
 METRIC_DEF_SRC = [
     "pos", "name", "description", "unit", "metric_type",
     *RESOURCE_NK, *SCOPE_NK,
 ]
+
+DIM_TABLES = ("resources", "instrumentation_scopes", "metrics")
+DIM_TOUCH_TABLES = ("resources_touch", "scopes_touch", "metric_defs_touch")
+_SCOPE_COLS = ["name", "version", "attributes", "schema_url"]
+_METRIC_KEY = ["name", "metric_type", "resource_id", "scope_id"]
+
+
+def dim_touches(records: DataFrame) -> dict[str, DataFrame]:
+    """The dimension touches of a record stream (its rec_kind='resource'
+    / 'scope' / 'metric_def' rows), keyed by DIM_TOUCH_TABLES. Resource
+    and scope touches are deduped per stream; metric-def touches keep
+    their (conv_id, turn_idx, pos) arrival stamps, so first-definition-
+    wins folds the same whichever bucket or micro-batch wrote them."""
+    def kind(k: str) -> DataFrame:
+        return records.filter(F.col("rec_kind") == k)
+
+    return {
+        "resources_touch": kind("resource").select(*RESOURCE_NK).dropDuplicates(),
+        "scopes_touch": kind("scope").select(*SCOPE_NK).dropDuplicates(),
+        "metric_defs_touch": kind("metric_def").select(
+            "conv_id", "turn_idx", *METRIC_DEF_SRC
+        ),
+    }
+
+
+def _dense_id(*cols: str) -> Column:
+    # tiny deduped dimension: the single-partition window is bounded
+    return F.row_number().over(Window.orderBy(*cols)).cast("long")
+
+
+def _fold_resources(touch: DataFrame, mode: str) -> DataFrame:
+    """resources(id, attributes, schema_url) — db.go:63-67."""
+    res = touch.select(
+        F.col("res_attributes").alias("attributes"),
+        F.col("res_schema_url").alias("schema_url"),
+    ).dropDuplicates()
+    if mode == "hash":
+        id_col = resource_id_expr(F.col("attributes"), F.col("schema_url"))
+    else:
+        id_col = _dense_id("attributes", "schema_url")
+    return res.select(id_col.alias("id"), "attributes", "schema_url")
+
+
+def _fold_scopes(touch: DataFrame, mode: str) -> DataFrame:
+    """instrumentation_scopes(id, name, version, attributes, schema_url)
+    — db.go:70-76."""
+    sco = touch.select(
+        *(F.col(nk).alias(c) for nk, c in zip(SCOPE_NK, _SCOPE_COLS))
+    ).dropDuplicates()
+    if mode == "hash":
+        id_col = scope_id_expr(*(F.col(c) for c in _SCOPE_COLS))
+    else:
+        id_col = _dense_id(*_SCOPE_COLS)
+    return sco.select(id_col.alias("id"), *_SCOPE_COLS)
+
+
+def _fold_metric_defs(
+    touch: DataFrame, resources: DataFrame, scopes: DataFrame, mode: str
+) -> DataFrame:
+    """metrics(id, name, description, unit, metric_type, resource_id,
+    scope_id) — db.go:101-111. First definition wins for description/
+    unit (shared.go:140-141) as min_by over the canonical arrival order
+    (conv_id, turn_idx, pos): a hash aggregate with MAP-SIDE PARTIALS
+    instead of a row_number window, which shuffled every def row and
+    sorted each partition (guide §2.3 "aggregate before you shuffle").
+    (conv_id, turn_idx, pos) is unique per def row, so min_by is
+    tie-free."""
+    defs = attach_dim_ids(
+        touch.select("conv_id", "turn_idx", *METRIC_DEF_SRC), resources, scopes, mode
+    )
+    first = defs.groupBy(*_METRIC_KEY).agg(
+        F.min_by(
+            F.struct("description", "unit"), F.struct("conv_id", "turn_idx", "pos")
+        ).alias("__first")
+    )
+    if mode == "hash":
+        id_col = metric_id_expr(*(F.col(c) for c in _METRIC_KEY))
+    else:
+        id_col = _dense_id(*_METRIC_KEY)
+    return first.select(
+        id_col.alias("id"), "name", "__first.description", "__first.unit",
+        "metric_type", "resource_id", "scope_id",
+    )
+
+
+def fold_dims(touches: dict[str, DataFrame], mode: str = "hash") -> dict[str, DataFrame]:
+    """The one dimension fold: touch frames (of one stream, or appended
+    by any number of buckets or micro-batches; extra columns such as a
+    ``bucket`` partition column are ignored) -> the three dimension
+    sinks, keyed by DIM_TABLES."""
+    resources = _fold_resources(touches["resources_touch"], mode)
+    scopes = _fold_scopes(touches["scopes_touch"], mode)
+    metrics = _fold_metric_defs(touches["metric_defs_touch"], resources, scopes, mode)
+    return dict(zip(DIM_TABLES, (resources, scopes, metrics)))
+
+
+def build_resources(records: DataFrame, mode: str = "hash") -> DataFrame:
+    """resources sink of a record stream: touch projection -> fold."""
+    return _fold_resources(dim_touches(records)["resources_touch"], mode)
+
+
+def build_scopes(records: DataFrame, mode: str = "hash") -> DataFrame:
+    """instrumentation_scopes sink of a record stream: touch projection
+    -> fold."""
+    return _fold_scopes(dim_touches(records)["scopes_touch"], mode)
 
 
 def build_metric_defs(
@@ -112,52 +168,10 @@ def build_metric_defs(
     scopes: DataFrame,
     mode: str = "hash",
 ) -> DataFrame:
-    """metrics(id, name, description, unit, metric_type, resource_id,
-    scope_id) — db.go:101-111. First definition wins for description/unit
-    (shared.go:140-141): ranked by canonical arrival order
-    (conv_id, turn_idx, in-turn pos)."""
-    if mode == "hash" and "resource_id" in records.columns:
-        # ids were resolved on the stream by enrich_record_ids
-        defs = records.filter(F.col("rec_kind") == "metric_def").select(
-            "conv_id", "turn_idx", "pos", "name", "description", "unit",
-            "metric_type", "resource_id", "scope_id",
-        )
-    else:
-        defs = records.filter(F.col("rec_kind") == "metric_def").select(
-            "conv_id", "turn_idx", *METRIC_DEF_SRC
-        )
-        defs = attach_dim_ids(defs, resources, scopes, mode)
-    # First-definition-wins as min_by over the canonical arrival order
-    # (conv_id, turn_idx, pos) — a hash aggregate with MAP-SIDE PARTIALS
-    # instead of the previous row_number window (which shuffled every
-    # def row and sorted each partition; guide §2.3 "aggregate before
-    # you shuffle"). (conv_id, turn_idx, pos) is unique per def row, so
-    # min_by is tie-free and the result rows are identical.
-    first = (
-        defs.groupBy("name", "metric_type", "resource_id", "scope_id")
-        .agg(
-            F.min_by(
-                F.struct("description", "unit"),
-                F.struct("conv_id", "turn_idx", "pos"),
-            ).alias("__first")
-        )
-        .select(
-            "name",
-            F.col("__first.description").alias("description"),
-            F.col("__first.unit").alias("unit"),
-            "metric_type", "resource_id", "scope_id",
-        )
-    )
-    if mode == "hash":
-        id_col = metric_id_expr(
-            F.col("name"), F.col("metric_type"), F.col("resource_id"), F.col("scope_id")
-        )
-    else:
-        w2 = Window.orderBy("name", "metric_type", "resource_id", "scope_id")
-        id_col = F.row_number().over(w2).cast("long")
-    return first.select(
-        id_col.alias("id"),
-        "name", "description", "unit", "metric_type", "resource_id", "scope_id",
+    """metrics sink of a record stream: touch projection -> fold (dense
+    ids resolve against ``resources`` and ``scopes``)."""
+    return _fold_metric_defs(
+        dim_touches(records)["metric_defs_touch"], resources, scopes, mode
     )
 
 

@@ -21,7 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sqlite_otel_spark.operators.dims import RESOURCE_NK, SCOPE_NK, attach_dim_ids
+from sqlite_otel_spark.operators.dims import (
+    RESOURCE_NK,
+    SCOPE_NK,
+    attach_dim_ids,
+    metric_id_expr,
+)
 
 LINEAGE = ["conv_id", "turn_idx", "role", "tool", "ts"]
 
@@ -102,10 +107,9 @@ def build_points(
         )
     pts = attach_dim_ids(_kind(records, "point", POINT_SRC), resources, scopes, mode)
     if mode == "hash":
-        pts = pts.withColumn(
-            "metric_id",
-            F.xxhash64(F.lit("metric"), "metric_name", "metric_type", "resource_id", "scope_id"),
-        )
+        pts = pts.withColumn("metric_id", metric_id_expr(
+            *(F.col(c) for c in ("metric_name", "metric_type", "resource_id", "scope_id"))
+        ))
     else:
         md = F.broadcast(
             metric_defs.select(

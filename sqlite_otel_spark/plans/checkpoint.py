@@ -10,25 +10,27 @@ buckets without a manifest row. A bucket whose files half-wrote but
 whose manifest row never landed is simply overwritten — bucket writes
 are idempotent.
 
-Two-stage design keeps resume sound despite the GLOBAL spans PK:
+Every bucket runs the same records→sinks core as batch and streaming
+(plans/pipeline.py); what is checkpoint-specific is where the spans-PK
+verdicts come from and where the touches go:
 
  stage A (global, cheap, deterministic): scan span keys with a
    lightweight extractor (no canonicalization), find duplicated keys,
-   fully parse only the conflicting turns, replay the sequential commit
-   order, persist the invalid-turn set under _control/. This is a pure
-   function of the input, so any resume recomputes-or-reads the same
-   verdicts.
+   fully parse only the conflicting turns (a bounded collect), replay
+   the sequential commit order (operators/conflicts.py), persist the
+   invalid-turn set under _control/. This is a pure function of the
+   input, so any resume recomputes-or-reads the same verdicts.
 
- stage B (per bucket, embarrassingly parallel): full parse -> drop
-   invalid turns -> facts with HASH surrogate ids (ids are pure
-   functions of natural keys, so buckets never coordinate) -> write
-   facts + this bucket's dimension touches -> append manifest row with
-   per-sink counts (the lineage record).
+ stage B (per bucket, embarrassingly parallel): parse_records ->
+   emit_sinks with the stage-A relation -> write_frames into bucket=N
+   directories (HASH surrogate ids are pure functions of natural keys,
+   so buckets never coordinate) -> append the manifest row with the
+   per-sink counts observed on the writes (the lineage record).
 
- finalize (idempotent): dedup the per-bucket dimension touches into the
-   final dims (first-definition-wins uses the (conv_id, turn_idx, pos)
-   stamps, so the outcome is independent of bucket processing order),
-   and write the run-level aggregates.
+ finalize (idempotent): fold the per-bucket dimension touches into the
+   final dims under _final/ (dims.fold_dims: first-definition-wins uses
+   the (conv_id, turn_idx, pos) stamps, so the outcome is independent of
+   bucket processing order).
 
 Checkpointed mode requires surrogate_id_mode='hash' (dense ids would
 need global coordination — exactly what this design avoids).
@@ -38,16 +40,26 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.functions.parse import extract_span_keys, parse_turn
-from sqlite_otel_spark.operators import facts as facts_ops
-from sqlite_otel_spark.operators.dims import METRIC_DEF_SRC, enrich_record_ids
-from sqlite_otel_spark.operators.records import to_records
+from sqlite_otel_spark.operators.conflicts import (
+    collect_bounded,
+    invalid_relation,
+    replay_commits,
+)
+from sqlite_otel_spark.operators.dims import DIM_TABLES, DIM_TOUCH_TABLES, fold_dims
+from sqlite_otel_spark.plans.pipeline import (
+    FACT_TABLES,
+    emit_sinks,
+    parse_records,
+    write_frames,
+)
 
 _KEYS_SCHEMA = ArrayType(
     StructType([
@@ -55,9 +67,6 @@ _KEYS_SCHEMA = ArrayType(
         StructField("span_id", StringType()),
     ])
 )
-
-FACT_TABLES = ("spans", "log_records", "metric_data_points", "rejects")
-DIM_TOUCH_TABLES = ("resources_touch", "scopes_touch", "metric_defs_touch")
 
 
 def bucket_col(cfg: PipelineConfig):
@@ -96,30 +105,19 @@ def compute_invalid_turns(
         .select("conv_id", "turn_idx")
         .distinct()
     )
-    cand = (
+    cand = collect_bounded(
         transcripts.join(cand_turns, ["conv_id", "turn_idx"], "leftsemi")
-        .select("conv_id", "turn_idx", "text")
-        .limit(cfg.max_conflict_turns + 1)
-        .collect()
+        .select("conv_id", "turn_idx", "text"),
+        cfg.max_conflict_turns, "turns",
     )
-    if len(cand) > cfg.max_conflict_turns:
-        raise RuntimeError("span-PK conflict set exceeds max_conflict_turns")
-
     # Full parse of the (rare) conflicting turns, then sequential replay.
-    turns = []
-    for r in sorted(cand, key=lambda r: (r.conv_id, r.turn_idx)):
-        p = parse_turn(r.text, cfg.max_text_bytes)
+    pairs = []
+    for r in cand:
+        p = parse_turn(r.text, max_bytes)
         if p["error"] is None and p["signal_type"] == "trace":
-            turns.append(((r.conv_id, r.turn_idx),
-                          [(s["trace_id"], s["span_id"]) for s in p["spans"]]))
-    committed: set[tuple] = set()
-    invalid: list[tuple[str, int]] = []
-    for turn, keys in turns:
-        if any(k in committed for k in keys):
-            invalid.append(turn)
-        else:
-            committed.update(keys)
-    return invalid
+            pairs += [((r.conv_id, r.turn_idx), (s["trace_id"], s["span_id"]))
+                      for s in p["spans"]]
+    return replay_commits(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -128,60 +126,19 @@ def compute_invalid_turns(
 
 
 def _process_bucket(
-    spark: SparkSession,
     bucket_df: DataFrame,
     invalid_turns: DataFrame | None,
     out_dir: str,
     bucket: int,
     cfg: PipelineConfig,
 ) -> dict:
-    records = enrich_record_ids(
-        to_records(bucket_df, cfg.max_text_bytes), "hash"
-    ).persist()
+    records = parse_records(bucket_df, cfg, "hash").persist()
     try:
-        rejects = facts_ops.build_rejects(records)
-        valid = records
-        if invalid_turns is not None:
-            rejects = rejects.unionByName(
-                facts_ops.conflict_rejects(records, invalid_turns)
-            )
-            valid = records.join(
-                F.broadcast(invalid_turns), ["conv_id", "turn_idx"], "left_anti"
-            )
-
-        # hash ids only (see module docstring)
-        outputs = {
-            "spans": facts_ops.build_spans(valid, None, None, "hash"),
-            "log_records": facts_ops.build_log_records(valid, None, None, "hash"),
-            "metric_data_points": facts_ops.build_points(valid, None, None, None, "hash"),
-            "rejects": rejects,
-            "resources_touch": (
-                valid.filter(F.col("rec_kind") == "resource")
-                .select("res_attributes", "res_schema_url").dropDuplicates()
-            ),
-            "scopes_touch": (
-                valid.filter(F.col("rec_kind") == "scope")
-                .select("scope_name", "scope_version", "scope_attributes",
-                        "scope_schema_url").dropDuplicates()
-            ),
-            "metric_defs_touch": (
-                valid.filter(F.col("rec_kind") == "metric_def")
-                .select("conv_id", "turn_idx", *METRIC_DEF_SRC)
-            ),
-        }
-        # Row counts ride the write itself as observed metrics — the
-        # commit must not rescan its own output (7 extra scans/bucket).
-        from pyspark.sql import Observation
-
-        counts = {}
-        for name, df in outputs.items():
-            path = f"{out_dir}/{name}/bucket={bucket}"
-            obs = Observation(f"rows_{name}_b{bucket}")
-            df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).option("compression", cfg.compression).parquet(path)
-            counts[name] = obs.get["n"]
-        return counts
+        # build the cache once: the concurrent writes would otherwise
+        # each schedule their own cache-building stage
+        records.count()
+        _, frames = emit_sinks(records, invalid_turns)
+        return write_frames(frames, lambda name: f"{out_dir}/{name}/bucket={bucket}", cfg)
     finally:
         records.unpersist()
 
@@ -211,15 +168,7 @@ def run_checkpointed(
         invalid = compute_invalid_turns(spark, transcripts, cfg)
         with open(control_path, "w") as f:
             json.dump(invalid, f)
-    # coalesce(1): tiny local relation, broadcast-built per bucket job
-    # (see operators/conflicts.py — round-6 near-empty-partition fix)
-    invalid_df = (
-        spark.createDataFrame(
-            invalid, "conv_id string, turn_idx int"
-        ).coalesce(1)
-        if invalid
-        else None
-    )
+    invalid_df = invalid_relation(spark, invalid)
 
     committed = read_manifest_buckets(spark, out_dir)
     with_bucket = transcripts.withColumn("bucket", bucket_col(cfg)).persist()
@@ -230,7 +179,7 @@ def run_checkpointed(
 
     def do_bucket(b: int) -> int:
         bucket_df = with_bucket.filter(F.col("bucket") == b).drop("bucket")
-        counts = _process_bucket(spark, bucket_df, invalid_df, out_dir, b, cfg)
+        counts = _process_bucket(bucket_df, invalid_df, out_dir, b, cfg)
         _write_manifest_row(spark, out_dir, b, run_id, counts)
         return b
 
@@ -249,8 +198,6 @@ def run_checkpointed(
             # bucket=N paths), so submit several bucket pipelines
             # concurrently — Spark's scheduler interleaves their stages
             # and the commit granularity (resume unit) is unchanged.
-            from concurrent.futures import ThreadPoolExecutor
-
             workers = max(1, cfg.max_concurrent_buckets)
             with ThreadPoolExecutor(max_workers=workers) as pool:
                 for b in pool.map(do_bucket, todo):
@@ -286,63 +233,17 @@ def read_manifest(spark, out_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Finalize — dims + aggregates from committed buckets (idempotent).
+# Finalize — dims from committed buckets (idempotent).
 # ---------------------------------------------------------------------------
 
 
 def finalize(spark: SparkSession, out_dir: str, cfg: PipelineConfig) -> None:
-    res_t = spark.read.parquet(f"{out_dir}/resources_touch")
-    resources = (
-        res_t.select(
-            F.col("res_attributes").alias("attributes"),
-            F.col("res_schema_url").alias("schema_url"),
-        )
-        .dropDuplicates()
-        .select(F.xxhash64(F.lit("res"), "attributes", "schema_url").alias("id"),
-                "attributes", "schema_url")
-    )
-    sco_t = spark.read.parquet(f"{out_dir}/scopes_touch")
-    scopes = (
-        sco_t.select(
-            F.col("scope_name").alias("name"), F.col("scope_version").alias("version"),
-            F.col("scope_attributes").alias("attributes"),
-            F.col("scope_schema_url").alias("schema_url"),
-        )
-        .dropDuplicates()
-        .select(
-            F.xxhash64(F.lit("scope"), "name", "version", "attributes", "schema_url").alias("id"),
-            "name", "version", "attributes", "schema_url",
-        )
-    )
-    md_t = spark.read.parquet(f"{out_dir}/metric_defs_touch")
-    md = md_t.withColumn(
-        "resource_id", F.xxhash64(F.lit("res"), "res_attributes", "res_schema_url")
-    ).withColumn(
-        "scope_id",
-        F.xxhash64(F.lit("scope"), "scope_name", "scope_version",
-                   "scope_attributes", "scope_schema_url"),
-    )
-    w = (
-        Window.partitionBy("name", "metric_type", "resource_id", "scope_id")
-        .orderBy("conv_id", "turn_idx", "pos")
-    )
-    metrics = (
-        md.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.xxhash64(F.lit("metric"), "name", "metric_type", "resource_id", "scope_id").alias("id"),
-            "name", "description", "unit", "metric_type", "resource_id", "scope_id",
-        )
-    )
-    for name, df in (("resources", resources), ("instrumentation_scopes", scopes),
-                     ("metrics", metrics)):
-        df.write.mode("overwrite").option("compression", cfg.compression).parquet(
-            f"{out_dir}/_final/{name}"
-        )
+    touches = {t: spark.read.parquet(f"{out_dir}/{t}") for t in DIM_TOUCH_TABLES}
+    write_frames(fold_dims(touches), lambda name: f"{out_dir}/_final/{name}", cfg)
 
 
 def read_sinks(spark: SparkSession, out_dir: str) -> dict[str, DataFrame]:
     out = {t: spark.read.parquet(f"{out_dir}/{t}") for t in FACT_TABLES}
-    for t in ("resources", "instrumentation_scopes", "metrics"):
+    for t in DIM_TABLES:
         out[t] = spark.read.parquet(f"{out_dir}/_final/{t}")
     return out

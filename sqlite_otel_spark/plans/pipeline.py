@@ -1,24 +1,25 @@
-"""The end-to-end batch plan: parse -> enrich -> route -> sinks -> aggregates.
+"""The one records→sinks core, and the batch plan built on it.
 
-Spark rebuild of the reference's request lifecycle (SURVEY §3): one
-declarative DAG per run instead of one goroutine+transaction per HTTP
-request. Stage map:
+Spark rebuild of the reference's request lifecycle (SURVEY §3): every
+OTLP request goes through the same parse -> get-or-create dims -> insert
+facts code (database/*.go). Here batch, checkpoint (plans/checkpoint.py)
+and streaming (streaming/stream.py) share that step too:
 
-    read transcripts                 (S1 — source)
-    [salted repartition on conv_id]  (north-rule §4.2.1 — only when the
-                                      input layout is conversation-
-                                      clustered; parquet scan splits are
-                                      byte-balanced already)
-    Arrow mapInArrow parse           (P1-P11, F1-F7 — one Python pass
-                                      emitting the flat record stream,
-                                      operators/records.py)
-    persist()                        (shared upstream of the 3-way fan-out,
-                                      R1; flat schema -> pruned rescans)
-    cross-turn span-PK resolution    (D4 cascade, single aggregation)
-    dims: resources/scopes/metrics   (D1-D3, dedup + surrogate keys)
-    facts: spans/log_records/points  (filter+project + D5 FK enrichment)
-    role/tool broadcast enrichment   (D5 graft dims)
-    sinks + accounting               (S3, A1-A3)
+    parse_records    Arrow mapInArrow parse (P1-P11, F1-F7, one Python
+                     pass emitting the flat record stream,
+                     operators/records.py) + surrogate ids on the stream
+    [persist/stage]  the caller materializes the stream once (R1)
+    invalid turns    bounded, local (conv_id, turn_idx) relation from the
+                     spans-PK cascade (operators/conflicts.py)
+    emit_sinks       spans / log_records / metric_data_points / rejects +
+                     the three dimension touches (operators/dims.py)
+    write_frames     one concurrent writer for every sink frame, row
+                     counts observed on the write itself
+
+Batch (``run_pipeline``) is the one-bucket case: the whole input is one
+stream, its touches fold in memory (``dims.fold_dims``), and the result
+feeds the role/tool enrichment and the A1-A3 aggregates. Checkpoint and
+stream write the touches and fold them on read.
 
 Shuffle inventory (what actually moves at 100 TB):
  - parse + fact filter/project + hash-mode FK attach: narrow, ZERO
@@ -32,9 +33,13 @@ Shuffle inventory (what actually moves at 100 TB):
 
 from __future__ import annotations
 
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -43,10 +48,11 @@ from sqlite_otel_spark.operators import aggregates as agg
 from sqlite_otel_spark.operators import facts as facts_ops
 from sqlite_otel_spark.operators.conflicts import drop_conflicted, resolve_span_conflicts
 from sqlite_otel_spark.operators.dims import (
-    build_metric_defs,
-    build_resources,
-    build_scopes,
+    DIM_TABLES,
+    DIM_TOUCH_TABLES,
+    dim_touches,
     enrich_record_ids,
+    fold_dims,
 )
 from sqlite_otel_spark.operators.enrich import enrich, role_dim, tool_dim
 from sqlite_otel_spark.operators.records import to_records
@@ -60,6 +66,7 @@ SINK_TABLES = (
     "metric_data_points",
     "rejects",
 )
+FACT_TABLES = ("spans", "log_records", "metric_data_points", "rejects")
 
 
 @dataclass
@@ -92,6 +99,40 @@ def salted_repartition(df: DataFrame, cfg: PipelineConfig,
     return df.repartition(F.col("conv_id"), salt)
 
 
+def parse_records(transcripts: DataFrame, cfg: PipelineConfig, mode: str) -> DataFrame:
+    """The flat record stream with surrogate ids resolved on it; the
+    caller materializes it once for the fan-out."""
+    return enrich_record_ids(
+        to_records(transcripts, cfg.max_text_bytes, emit_text=cfg.emit_text), mode
+    )
+
+
+def emit_sinks(
+    records: DataFrame, invalid_turns: DataFrame | None, mode: str = "hash"
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """The records→sinks core. ``records`` is the materialized record
+    stream; ``invalid_turns`` the bounded, local relation of turns the
+    spans-PK cascade rejected (None when there are none). Returns the
+    accepted stream and the frames: spans, log_records,
+    metric_data_points, rejects and the DIM_TOUCH_TABLES touches."""
+    valid = drop_conflicted(records, invalid_turns)
+    rejects = facts_ops.build_rejects(records)
+    if invalid_turns is not None:
+        rejects = rejects.unionByName(facts_ops.conflict_rejects(records, invalid_turns))
+    touches = dim_touches(valid)
+    # hash ids already ride the stream; dense ids are broadcast lookups
+    # into the folded dims (batch only)
+    dims = fold_dims(touches, mode) if mode != "hash" else dict.fromkeys(DIM_TABLES)
+    res, sco, md = (dims[t] for t in DIM_TABLES)
+    return valid, {
+        "spans": facts_ops.build_spans(valid, res, sco, mode),
+        "log_records": facts_ops.build_log_records(valid, res, sco, mode),
+        "metric_data_points": facts_ops.build_points(valid, res, sco, md, mode),
+        "rejects": rejects,
+        **touches,
+    }
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -114,9 +155,7 @@ def run_pipeline(
 
     src = salted_repartition(transcripts, cfg, repartition_to) if do_salt else transcripts
 
-    records_all = enrich_record_ids(
-        to_records(src, cfg.max_text_bytes, emit_text=cfg.emit_text), mode
-    )
+    records_all = parse_records(src, cfg, mode)
     # One materialization shared by the reject sink, the conflict pass and
     # the 3-way fan-out (R1): without it every sink would re-run the UDF.
     # The flat schema means each downstream scan prunes to its own columns;
@@ -135,43 +174,21 @@ def run_pipeline(
         records_all = records_all.persist(StorageLevel.MEMORY_AND_DISK)
         persisted.append(records_all)
 
-    rejects_local = facts_ops.build_rejects(records_all)
-
     invalid_turns, n_invalid = resolve_span_conflicts(
         spark, records_all, cfg.max_conflict_turns
     )
-    valid = drop_conflicted(records_all, invalid_turns)
-    if invalid_turns is not None:
-        rejects = rejects_local.unionByName(
-            facts_ops.conflict_rejects(records_all, invalid_turns)
-        )
-    else:
-        rejects = rejects_local
-
-    resources = build_resources(valid, mode)
-    scopes = build_scopes(valid, mode)
-    metric_defs = build_metric_defs(valid, resources, scopes, mode)
-
-    spans = facts_ops.build_spans(valid, resources, scopes, mode)
-    log_records = facts_ops.build_log_records(valid, resources, scopes, mode)
-    points = facts_ops.build_points(valid, resources, scopes, metric_defs, mode)
+    valid, frames = emit_sinks(records_all, invalid_turns, mode)
+    dims = fold_dims({t: frames.pop(t) for t in DIM_TOUCH_TABLES}, mode)
+    sinks = {**dims, **frames}
 
     routed = facts_ops.build_routed(valid)
     roles, tools = role_dim(spark), tool_dim(spark)
     routed_enriched = enrich(routed, roles, tools)
 
     return PipelineResult(
-        sinks={
-            "resources": resources,
-            "instrumentation_scopes": scopes,
-            "metrics": metric_defs,
-            "spans": spans,
-            "log_records": log_records,
-            "metric_data_points": points,
-            "rejects": rejects,
-        },
+        sinks=sinks,
         routed=routed_enriched,
-        accounting=agg.request_accounting(routed, rejects),
+        accounting=agg.request_accounting(routed, sinks["rejects"]),
         by_signal_tool=agg.counts_by_signal_tool(routed_enriched),
         by_time_bucket=agg.counts_by_time_bucket(routed_enriched),
         n_conflict_invalid=n_invalid,
@@ -255,9 +272,100 @@ def _is_catalog_missing(e: Exception) -> bool:
     return any(m in msg for m in markers)
 
 
-def write_sinks(result: PipelineResult, out_dir: str, cfg: PipelineConfig | None = None) -> None:
+def write_frames(
+    frames: dict[str, DataFrame],
+    dest: Callable[[str], str],
+    cfg: PipelineConfig,
+    mode: str = "overwrite",
+    commit: Callable[[str, DataFrame], bool] | None = None,
+) -> dict[str, int]:
+    """The one sink writer: write each frame to parquet at
+    ``dest(name)`` and return {name: rows written}.
+
+    The frames are independent sub-DAGs (over one materialized record
+    stream, or tiny dimension folds), so they are submitted CONCURRENTLY
+    from driver threads, one per frame (Spark's FIFO scheduler
+    interleaves their stages): sequential submission would leave most
+    of the cluster idle on the small writes while paying full
+    scheduling latency once per frame. Row counts ride each write as an
+    unnamed observed metric — no output is rescanned to count it.
+
+    Layout, in every path: ``compression``; file rotation (A4) —
+    ``target_file_bytes`` derives maxRecordsPerFile from measured
+    parquet row width (see derive_max_records_per_file), else the
+    static ``max_records_per_file`` cap applies; and, with
+    ``partition_facts_by_day``, FACT_TABLES partitioned by days(ts).
+    ``commit(name, df)``, when given, is tried first and returns True
+    when it wrote the frame itself (write_sinks' Iceberg commit)."""
+
+    def write_one(item: tuple[str, DataFrame]) -> tuple[str, int]:
+        name, df = item
+        obs = Observation()
+        observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        if commit is None or not commit(name, observed):
+            # probe the unobserved frame: its sample job must not be
+            # the observation's first action
+            per_file = None
+            if cfg.target_file_bytes is not None:
+                per_file = derive_max_records_per_file(
+                    df, cfg.target_file_bytes, cfg.compression
+                )
+            if per_file is None:
+                per_file = cfg.max_records_per_file
+            partition_cols: list[str] = []
+            if cfg.partition_facts_by_day and "ts" in df.columns and name in FACT_TABLES:
+                # M4 partition layout: days(ts) as a directory-level
+                # partition column — time-ranged scans prune partitions
+                # before reading a byte (the parquet analogue of the
+                # Iceberg days() transform the north_star names).
+                observed = observed.withColumn("ts_day", F.to_date("ts"))
+                partition_cols = ["ts_day"]
+            (
+                observed.write.mode(mode)
+                .option("compression", cfg.compression)
+                .option("maxRecordsPerFile", per_file)
+                .partitionBy(*partition_cols)
+                .parquet(dest(name))
+            )
+        return name, obs.get["n"]
+
+    with ThreadPoolExecutor(max_workers=max(1, len(frames))) as pool:
+        return dict(pool.map(write_one, frames.items()))
+
+
+def _iceberg_commit(cfg: PipelineConfig, name: str, df: DataFrame) -> bool:
+    """One Iceberg snapshot commit per sink; False (parquet fallback)
+    only when no Iceberg catalog is configured."""
+    try:
+        (
+            df.writeTo(f"{cfg.iceberg_table_prefix}.{name}")
+            .using("iceberg")
+            .tableProperty("write.parquet.compression-codec", cfg.compression)
+            .tableProperty("write.target-file-size-bytes",
+                           str(cfg.target_file_bytes or 512 * 1024 * 1024))
+            .createOrReplace()
+        )
+        return True
+    except Exception as e:
+        # Fall back to parquet ONLY for catalog-resolution failures (no
+        # Iceberg jars/catalog configured). A genuine
+        # snapshot-commit failure on a configured catalog must surface,
+        # or the atomic-commit contract silently degrades (ADVICE r2 #2).
+        if not _is_catalog_missing(e):
+            raise
+        warnings.warn(
+            f"iceberg write for sink '{name}' unavailable "
+            f"({type(e).__name__}); falling back to parquet"
+        )
+        return False
+
+
+def write_sinks(
+    result: PipelineResult, out_dir: str, cfg: PipelineConfig | None = None
+) -> dict[str, int]:
     """S3/S4: atomic per-table commits (≙ the reference's per-request
-    SQLite transaction + schema auto-init, database/db.go:53-165).
+    SQLite transaction + schema auto-init, database/db.go:53-165) of the
+    batch sinks through ``write_frames``; returns rows per sink.
 
     Table format (cfg.table_format):
      - 'iceberg': ``writeTo(...).createOrReplace()`` — one Iceberg
@@ -265,79 +373,12 @@ def write_sinks(result: PipelineResult, out_dir: str, cfg: PipelineConfig | None
        matching WAL readers-vs-writer semantics, database/db.go:26-28).
        On a cluster the dimension get-or-create would become
        ``MERGE INTO dim USING touches ON natural_key WHEN NOT MATCHED
-       THEN INSERT`` per batch; falls back to parquet when no catalog
-       is configured (this sandbox has no Iceberg jars).
-     - 'parquet' (default): plain parquet directory per sink.
-
-    File rotation (A4): ``target_file_bytes`` derives maxRecordsPerFile
-    from measured parquet row width (see derive_max_records_per_file),
-    else the static ``max_records_per_file`` cap applies.
-
-    The seven sink branches are independent sub-DAGs over the shared
-    persisted record stream, so they are submitted CONCURRENTLY from
-    driver threads (Spark's FIFO scheduler interleaves their stages):
-    sequential submission would leave most of the cluster idle on the
-    small dimension writes while paying full scheduling latency 7x."""
+       THEN INSERT`` per batch; falls back to parquet when no Iceberg
+       catalog is configured.
+     - 'parquet' (default): plain parquet directory per sink."""
     cfg = cfg or PipelineConfig()
-
-    def write_one(item):
-        name, df = item
-        per_file = None
-        if cfg.target_file_bytes is not None:
-            per_file = derive_max_records_per_file(
-                df, cfg.target_file_bytes, cfg.compression
-            )
-        if per_file is None:
-            per_file = cfg.max_records_per_file
-        if cfg.table_format == "iceberg":
-            try:
-                (
-                    df.writeTo(f"{cfg.iceberg_table_prefix}.{name}")
-                    .using("iceberg")
-                    .tableProperty("write.parquet.compression-codec", cfg.compression)
-                    .tableProperty("write.target-file-size-bytes",
-                                   str(cfg.target_file_bytes or 512 * 1024 * 1024))
-                    .createOrReplace()
-                )
-                return
-            except Exception as e:
-                # Fall back to parquet ONLY for catalog-resolution
-                # failures (no Iceberg jars/catalog configured — the
-                # sandbox case). A genuine snapshot-commit failure on a
-                # configured catalog must surface, or the atomic-commit
-                # contract silently degrades (ADVICE r2 #2).
-                if not _is_catalog_missing(e):
-                    raise
-                import warnings
-
-                warnings.warn(
-                    f"iceberg write for sink '{name}' unavailable "
-                    f"({type(e).__name__}); falling back to parquet"
-                )
-        writer = df
-        partition_cols: list[str] = []
-        if (cfg.partition_facts_by_day and "ts" in df.columns
-                and name in ("spans", "log_records", "metric_data_points",
-                             "rejects")):
-            # M4 partition layout: days(ts) as a directory-level
-            # partition column — time-ranged scans prune partitions
-            # before reading a byte (the parquet analogue of the
-            # Iceberg days() transform the north_star names).
-            writer = df.withColumn("ts_day", F.to_date("ts"))
-            partition_cols = ["ts_day"]
-        w = (
-            writer.write.mode("overwrite")
-            .option("compression", cfg.compression)
-            .option("maxRecordsPerFile", per_file)
-        )
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(f"{out_dir}/{name}")
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(result.sinks)) as pool:
-        list(pool.map(write_one, result.sinks.items()))
+    commit = partial(_iceberg_commit, cfg) if cfg.table_format == "iceberg" else None
+    return write_frames(result.sinks, lambda name: f"{out_dir}/{name}", cfg, commit=commit)
 
 
 def collect_aggregates(result: PipelineResult) -> dict[str, list]:

@@ -3,13 +3,20 @@ single-pass bounded dup-key collect (guide §2.4 — pass 2 used to re-run
 the whole groupBy as its broadcast build side) must keep the cascade
 semantics and the adversarial-input guard bit-identical."""
 
+import datetime as dt
+import json
+
 import pytest
 
+from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.operators.conflicts import (
     ConflictOverflowError,
     drop_conflicted,
     resolve_span_conflicts,
 )
+from sqlite_otel_spark.plans.checkpoint import run_checkpointed
+from sqlite_otel_spark.streaming.stream import process_batch
+from tests.conftest import transcripts_df
 
 SPAN_SCHEMA = (
     "rec_kind string, conv_id string, turn_idx int, trace_id string, span_id string"
@@ -86,3 +93,45 @@ def test_locally_failed_turns_excluded(spark):
     )
     invalid, n = resolve_span_conflicts(spark, recs, 100)
     assert invalid is None and n == 0
+
+
+def _trace_rows(spark, turns):
+    """Transcript rows whose trace turns carry the given span keys:
+    turns = [(conv_id, [(trace_id, span_id), ...]), ...]."""
+
+    def text(keys):
+        spans = [{"traceId": t, "spanId": s, "name": "n", "startTimeUnixNano": "1"}
+                 for t, s in keys]
+        return json.dumps({"resourceSpans": [{"resource": {"attributes": []},
+                                              "scopeSpans": [{"spans": spans}]}]})
+
+    ts = dt.datetime(2025, 1, 1)
+    return transcripts_df(spark, [
+        {"conv_id": c, "turn_idx": 0, "role": "user", "text": text(keys),
+         "tool": "bash", "ts": ts}
+        for c, keys in turns
+    ])
+
+
+HOT = ("ab" * 16, "11" * 8)
+
+
+def test_checkpoint_stage_a_overflow(spark, tmp_path):
+    # three turns share one span key: three candidate turns > cap 2
+    df = _trace_rows(spark, [(f"c{i}", [HOT]) for i in range(3)])
+    with pytest.raises(ConflictOverflowError):
+        run_checkpointed(spark, df, str(tmp_path), PipelineConfig(
+            checkpoint_buckets=2, max_conflict_turns=2))
+
+
+def test_stream_cross_batch_clash_overflow(spark, tmp_path):
+    # batch 0 commits three keys; batch 1 has no duplicate of its own,
+    # but each of its three turns clashes with a committed key: 3 > cap 2
+    cfg = PipelineConfig(max_conflict_turns=2)
+    keys = [("cd" * 16, f"{i:016x}") for i in range(3)]
+    out = str(tmp_path)
+    process_batch(spark, _trace_rows(spark, [(f"a{i}", [k]) for i, k in enumerate(keys)]),
+                  0, out, cfg)
+    with pytest.raises(ConflictOverflowError):
+        process_batch(spark, _trace_rows(spark, [(f"b{i}", [k]) for i, k in enumerate(keys)]),
+                      1, out, cfg)

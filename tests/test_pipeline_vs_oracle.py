@@ -194,8 +194,9 @@ def test_cascade_resolution(pipeline_and_oracle):
 
 
 def test_fused_rollup_matches_individual_aggregates(spark):
-    """collect_aggregates' one-job GROUPING SETS path must reproduce the
-    three individually-computed aggregate frames exactly."""
+    """collect_aggregates' one job (the finest-grain aggregation, folded
+    to the coarser granularities on the driver) must reproduce the three
+    individually-computed aggregate frames exactly."""
     from sqlite_otel_spark.plans.pipeline import collect_aggregates
 
     rows = _rows()

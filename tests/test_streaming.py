@@ -4,7 +4,6 @@ are fed in canonical (conv_id, turn_idx) order so the cross-batch span
 PK state is comparable), plus a watermarked windowed aggregate."""
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,11 +11,7 @@ from sqlite_otel_spark.config import PipelineConfig
 from sqlite_otel_spark.fixtures import make_transcripts
 from sqlite_otel_spark.oracle import OracleDB
 from sqlite_otel_spark.streaming import stream as st
-
-SCHEMA = pa.schema([
-    ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
-    ("text", pa.string()), ("tool", pa.string()), ("ts", pa.timestamp("us")),
-])
+from tests.conftest import ARROW_SCHEMA, write_part
 
 
 @pytest.fixture(scope="module")
@@ -25,10 +20,8 @@ def stream_dirs(tmp_path_factory):
     input_dir = tmp_path_factory.mktemp("stream_in")
     n = len(rows) // 3
     for i, chunk in enumerate([rows[:n], rows[n:2 * n], rows[2 * n:]]):
-        pq.write_table(
-            pa.Table.from_pylist(chunk, schema=SCHEMA),
-            str(input_dir / f"part-{i:03d}.parquet"),
-        )
+        write_part(pa.Table.from_pylist(chunk, schema=ARROW_SCHEMA),
+                   str(input_dir / f"part-{i:03d}.parquet"), i)
     return rows, str(input_dir), str(tmp_path_factory.mktemp("stream_out"))
 
 
@@ -82,14 +75,11 @@ def test_stateful_dedup_matches_sequential(spark, tmp_path):
     """applyInPandasWithState custom stateful operator: first-seen
     span-PK dedup across micro-batches must equal a sequential
     first-seen scan over the files in ingestion order."""
-    import pyarrow as pa_
-    import pyarrow.parquet as pq_
-
     from sqlite_otel_spark.streaming.stateful import dedup_span_keys_stateful
 
-    schema = pa_.schema([
-        ("conv_id", pa_.string()), ("turn_idx", pa_.int32()),
-        ("trace_id", pa_.string()), ("span_id", pa_.string()),
+    schema = pa.schema([
+        ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+        ("trace_id", pa.string()), ("span_id", pa.string()),
     ])
     # duplicates within a batch, across batches, and fresh keys per batch
     batches = [
@@ -99,15 +89,14 @@ def test_stateful_dedup_matches_sequential(spark, tmp_path):
     ]
     in_dir = tmp_path / "keys_in"
     in_dir.mkdir()
+    def write_keys(rows, i):
+        write_part(pa.Table.from_pylist(
+            [dict(zip(("conv_id", "turn_idx", "trace_id", "span_id"), r)) for r in rows],
+            schema=schema,
+        ), str(in_dir / f"part-{i:03d}.parquet"), i)
+
     for i, rows in enumerate(batches):
-        pq_.write_table(
-            pa_.Table.from_pylist(
-                [dict(zip(("conv_id", "turn_idx", "trace_id", "span_id"), r))
-                 for r in rows],
-                schema=schema,
-            ),
-            str(in_dir / f"part-{i:03d}.parquet"),
-        )
+        write_keys(rows, i)
 
     out_dir = str(tmp_path / "dedup_out")
 
@@ -145,14 +134,7 @@ def test_stateful_dedup_matches_sequential(spark, tmp_path):
 
     # restart durability: state recovers from the checkpoint — a new
     # file replaying old PKs plus one fresh PK emits ONLY the fresh one
-    pq_.write_table(
-        pa_.Table.from_pylist(
-            [dict(zip(("conv_id", "turn_idx", "trace_id", "span_id"), r))
-             for r in [("c3", 0, "t1", "s1"), ("c3", 1, "t9", "s9")]],
-            schema=schema,
-        ),
-        str(in_dir / "part-003.parquet"),
-    )
+    write_keys([("c3", 0, "t1", "s1"), ("c3", 1, "t9", "s9")], 3)
     got2 = run_stream()
     assert got2 == want | {("c3", 1, "t9", "s9")}
 
