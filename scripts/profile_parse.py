@@ -1,75 +1,24 @@
-"""Offline profile of the parse hot loop (no Spark/JVM needed).
-
-The per-turn Python kernel (operators/records.py make_kernel ->
-functions/parse.py parse_turn_into) is the dominant Python-side
-pipeline cost. This script replays the REAL kernel (imported from
-operators/records.py — ADVICE r5 #2: no hand-kept copy to
-desynchronize) over fixture batches read straight from the cached bench
-parquet via pyarrow, under cProfile, so optimization work aims at
-measured hot frames instead of guesses.
-
-Usage:
-    python scripts/profile_parse.py [n_turns] [path-to-transcripts.parquet]
-"""
-
-from __future__ import annotations
-
+"""cProfile of the parse kernel, no JVM: perfbench's ``kernel_turns_per_s``
+over ``n_turns`` of a transcripts parquet (default: bench.py's fixture).
+Usage: python scripts/profile_parse.py [n_turns] [transcripts.parquet]"""
 import cProfile
 import os
 import pstats
 import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def run_kernel(batches, out_schema, max_text_bytes=10 * 1024 * 1024,
-               emit_text=True) -> int:
-    """Drive the real operators/records.py kernel over ``batches``."""
-    from sqlite_otel_spark.operators.records import make_kernel
-
-    gen = make_kernel(out_schema, max_text_bytes, emit_text)
-    return sum(rb.num_rows for rb in gen(batches))
 
 
 def main() -> None:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path[:0] = [root, os.path.join(root, "perfbench")]
+    import bench
+    from layers import kernel_turns_per_s
+
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    if len(sys.argv) > 2:
-        path = sys.argv[2]
-    else:
-        import bench
-
-        path = bench.ensure_transcripts(max(20_000, n))
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from sqlite_otel_spark.operators.records import _INPUT_COLS, _pa_schema
-
-    tbl = pq.read_table(path).slice(0, n)
-    # replicate the JVM-side projection records.py feeds the kernel
-    tbl = tbl.add_column(
-        len(tbl.schema), "ts_us", pc.cast(tbl.column("ts"), "int64"))
-    tbl = tbl.add_column(
-        len(tbl.schema), "nb", pc.binary_length(tbl.column("text")))
-    tbl = tbl.select(list(_INPUT_COLS))
-    batches = tbl.combine_chunks().to_batches(max_chunksize=50_000)
-    print(f"{tbl.num_rows} turns in {len(batches)} arrow batches from {path}")
-    out_schema = _pa_schema(extra_n_bytes=False)
-
-    t0 = time.monotonic()
-    n_out = run_kernel(iter(batches), out_schema)
-    wall = time.monotonic() - t0
-    print(f"plain pass: {wall:.2f}s "
-          f"({tbl.num_rows / wall:,.0f} turns/s single-core), "
-          f"{n_out} records")
-
+    path = sys.argv[2] if len(sys.argv) > 2 else bench.ensure_transcripts(max(20_000, n))
+    print(f"plain pass: {kernel_turns_per_s(path, n):,.0f} turns/s single-core")
     prof = cProfile.Profile()
-    prof.enable()
-    run_kernel(iter(batches), out_schema)
-    prof.disable()
-    stats = pstats.Stats(prof)
-    stats.sort_stats("cumulative").print_stats(30)
+    prof.runcall(kernel_turns_per_s, path, n)
+    pstats.Stats(prof).sort_stats("cumulative").print_stats(30)
 
 
 if __name__ == "__main__":

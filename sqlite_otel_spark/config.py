@@ -2,7 +2,9 @@
 
 Mirrors the reference collector's tunables (handlers/handler_common.go:29
 10 MB body cap; main.go:41-44 rotation defaults) plus the Spark-side knobs
-mandated by the north rule (salting, AQE, broadcast dims, checkpointing).
+of the batch, checkpointed and streaming plans: surrogate ids,
+checkpoint buckets, the conflict cap, stream admission and the sink
+layout. Session-wide settings (AQE, serializer) live in session.py.
 """
 
 from __future__ import annotations
@@ -26,15 +28,6 @@ class PipelineConfig:
     #              dimensions are small by construction.
     surrogate_id_mode: str = "hash"
 
-    # Where the parsed record stream materializes for the sink fan-out:
-    #  - None (default): in-memory columnar cache (MEMORY_AND_DISK) —
-    #    right for micro-batches and the sandbox;
-    #  - a directory path: write the stream ONCE as parquet partitioned
-    #    by rec_kind and read it back — the 100 TB form: no executor-RAM
-    #    dependence, per-sink scans prune to their rec_kind partition,
-    #    and the staging table doubles as a restartable artifact.
-    staging_dir: str | None = None
-
     # Keep the raw transcript text on routed/turn records. The reference
     # collector never persists raw request bodies (it stores only parsed
     # records, handlers/handler_common.go:33-45); text retention is a
@@ -42,9 +35,6 @@ class PipelineConfig:
     # drops text right after parse — at 3M turns that removes ~2.7 GB of
     # Arrow transfer + cache traffic per run (the single largest column).
     emit_text: bool = True
-
-    # Salted repartition of hot conversations (north_rule; SURVEY §4.2.1).
-    salt_buckets: int = 8
 
     # Checkpoint/lineage (SURVEY §4.2.4): number of resumable input buckets,
     # and how many bucket pipelines the driver submits concurrently

@@ -21,10 +21,8 @@ exact, MinHash+LSH, SimHash, n-gram Jaccard. Spark-first designs:
    alternate. LSH banding turns signatures into (band, band_hash) keys
    whose equality join yields candidates;
  - SimHash is a 64-column conditional bit-sum (explode + map-side
-   partial agg; a within-row variant simhash_inline exists,
-   parity-tested, same interpreted-HOF caveat as MinHash), near-dups
-   found by 16-bit band equality then exact Hamming verification via
-   bit_count(xor) — all JVM built-ins.
+   partial agg), near-dups found by 16-bit band equality then exact
+   Hamming verification via bit_count(xor) — all JVM built-ins.
 """
 
 from __future__ import annotations
@@ -493,54 +491,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             F.when(F.col(f"b{j}") > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(0)
         )
     return sums.select("doc_id", fp.alias("simhash"))
-
-
-def simhash_inline(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", n_bits: int = 64,
-                   hash_fn: str = "xxhash64") -> DataFrame:
-    """Fully within-row SimHash, value-identical to ``simhash`` (parity-
-    tested both modes): token hashes are a within-row ``transform`` and
-    each bit's vote is ``2 * count(bit set) > n_tokens`` via an array
-    filter — zero exchanges before banding. **Not the default**: same
-    interpreted-HOF cost finding as minhash_signatures_inline (the
-    grouped form's shuffle is already map-side-combined partial sums).
-    Docs with no tokens are dropped, matching the explode form. Bag
-    semantics preserved (duplicate tokens vote once each, exactly like
-    the exploded rows)."""
-    df = _ensure_parallelism(df)
-    toks = tokens_col(F.col(text_col))
-    if hash_fn == "md5":
-        hashes = F.transform(
-            toks,
-            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
-            .cast("long"),
-        )
-    else:
-        hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    d = df.select(F.col(id_col).alias("doc_id"), hashes.alias("__h")).where(
-        F.size("__h") > 0
-    )
-    n = F.size(F.col("__h"))
-
-    # one-arg lambda required: F.filter feeds two-arg lambdas the array
-    # index as the second argument (see perm_min note above)
-    def bit_ones(j: int):
-        return F.size(
-            F.filter(
-                F.col("__h"),
-                lambda h: F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1,
-            )
-        )
-
-    fp = F.lit(0).cast("long")
-    for j in range(n_bits):
-        fp = fp.bitwiseOR(
-            F.when(bit_ones(j) * 2 > n,
-                   F.shiftleft(F.lit(1).cast("long"), j)).otherwise(0)
-        )
-    # closing exchange: ReuseExchange anchor for the banding self-join
-    # (see minhash_signatures_inline) — 2 longs/doc
-    return d.select("doc_id", fp.alias("simhash")).repartition("doc_id")
 
 
 def simhash_near_dups(fp: DataFrame, max_hamming: int = 3,

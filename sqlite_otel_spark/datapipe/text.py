@@ -432,55 +432,6 @@ def repetition_cols(tokens: Column) -> dict[str, Column]:
     return out
 
 
-def line_repetition_cols(text: Column) -> dict[str, Column]:
-    """Line-repetition signals (the C4 duplicate-line filters):
-    fraction of non-empty lines that are duplicates, and the fraction
-    of line CHARACTERS inside duplicated lines (char-weighted, the form
-    that catches a few huge repeated blocks). Within-row array
-    expressions (one run-length fold over the sorted lines); no
-    shuffle."""
-    lines = F.filter(F.split(text, "\n"), lambda l: F.trim(l) != "")
-    n = F.size(lines)
-    tot_chars = F.aggregate(
-        lines, F.lit(0).cast("long"), lambda a, l: a + F.length(l)
-    )
-    # chars inside duplicated lines via ONE run-length fold over the
-    # SORTED array (round 6): the old nested filter(lines, ...) put
-    # `lines` INSIDE the lambda body — interpreted HOFs re-evaluate the
-    # whole split+filter per element (O(lines^2) with a re-split each) —
-    # same bomb as the gram_array token regex. Equal lines have equal
-    # length, so completing a run of k > 1 adds k * length to the total.
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("dup"),
-    )
-
-    def step(acc, l):
-        run = F.when(acc["prev"].eqNullSafe(l), acc["run"] + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        dup = acc["dup"] + F.when(
-            run == 2, 2 * F.length(l).cast("long")
-        ).when(run > 2, F.length(l).cast("long")).otherwise(F.lit(0).cast("long"))
-        return F.struct(l.alias("prev"), run.alias("run"), dup.alias("dup"))
-
-    dup_chars = F.aggregate(
-        F.array_sort(lines), init, step, lambda acc: acc["dup"]
-    )
-    return {
-        "n_lines": n.cast("long"),
-        "dup_line_frac": (
-            F.when(n > 0, (n - F.size(F.array_distinct(lines))) / n)
-            .otherwise(F.lit(0.0)).cast("double")
-        ),
-        "dup_line_char_frac": (
-            F.when(tot_chars > 0, dup_chars / tot_chars)
-            .otherwise(F.lit(0.0)).cast("double")
-        ),
-    }
-
-
 def contamination_flags(docs, n: int = 4, eval_mod: int = 7,
                         text_col: str = "text", id_col: str = "doc_id"):
     """Train/eval n-gram decontamination: documents whose ``id % eval_mod

@@ -1,4 +1,4 @@
 from sqlite_otel_spark.functions.canonical_json import canonical_dumps, go_loads
-from sqlite_otel_spark.functions.parse import parse_turn, turn_records, PARSED_SCHEMA, RECORDS_SCHEMA
+from sqlite_otel_spark.functions.parse import parse_turn, RECORDS_SCHEMA
 
-__all__ = ["canonical_dumps", "go_loads", "parse_turn", "turn_records", "PARSED_SCHEMA", "RECORDS_SCHEMA"]
+__all__ = ["canonical_dumps", "go_loads", "parse_turn", "RECORDS_SCHEMA"]

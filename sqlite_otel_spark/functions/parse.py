@@ -54,14 +54,12 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from sqlite_otel_spark.functions.canonical_json import (
@@ -77,93 +75,72 @@ except ImportError:  # pragma: no cover
     _orjson = None
 
 # ---------------------------------------------------------------------------
-# Output schema of the parse stage (one struct per transcript turn).
+# Per-kind record fields, in the order the extractors emit their tuples.
 # ---------------------------------------------------------------------------
 
-_S = StringType()
-_L = LongType()
-
-
-def _struct(fields: list[tuple[str, Any]]) -> StructType:
-    return StructType([StructField(n, t, True) for n, t in fields])
-
-
-RESOURCE_KEY_FIELDS = [("res_attributes", _S), ("res_schema_url", _S)]
+RESOURCE_KEY_FIELDS = ["res_attributes", "res_schema_url"]
 SCOPE_KEY_FIELDS = [
-    ("scope_name", _S),
-    ("scope_version", _S),
-    ("scope_attributes", _S),
-    ("scope_schema_url", _S),
+    "scope_name",
+    "scope_version",
+    "scope_attributes",
+    "scope_schema_url",
 ]
 
 SPAN_FIELDS = [
-    ("trace_id", _S),
-    ("span_id", _S),
-    ("trace_state", _S),
-    ("parent_span_id", _S),
-    ("name", _S),
-    ("kind", _L),
-    ("start_time_unix_nano", _L),
-    ("end_time_unix_nano", _L),
-    ("attributes", _S),
-    ("events", _S),
-    ("links", _S),
-    ("status_code", _L),
-    ("status_message", _S),
+    "trace_id",
+    "span_id",
+    "trace_state",
+    "parent_span_id",
+    "name",
+    "kind",
+    "start_time_unix_nano",
+    "end_time_unix_nano",
+    "attributes",
+    "events",
+    "links",
+    "status_code",
+    "status_message",
     *RESOURCE_KEY_FIELDS,
     *SCOPE_KEY_FIELDS,
 ]
 
 LOG_FIELDS = [
-    ("time_unix_nano", _L),
-    ("observed_time_unix_nano", _L),
-    ("severity_number", _L),
-    ("severity_text", _S),
-    ("body", _S),
-    ("attributes", _S),
-    ("trace_id", _S),
-    ("span_id", _S),
-    ("flags", _L),
+    "time_unix_nano",
+    "observed_time_unix_nano",
+    "severity_number",
+    "severity_text",
+    "body",
+    "attributes",
+    "trace_id",
+    "span_id",
+    "flags",
     *RESOURCE_KEY_FIELDS,  # null -> resource_id = 0 (logs.go:29-35)
     *SCOPE_KEY_FIELDS,
 ]
 
 METRIC_DEF_FIELDS = [
-    ("pos", _L),  # arrival order inside the turn, for first-definition-wins
-    ("name", _S),
-    ("description", _S),
-    ("unit", _S),
-    ("metric_type", _S),
+    "pos",  # arrival order inside the turn, for first-definition-wins
+    "name",
+    "description",
+    "unit",
+    "metric_type",
     *RESOURCE_KEY_FIELDS,
     *SCOPE_KEY_FIELDS,
 ]
 
 POINT_FIELDS = [
-    ("metric_name", _S),
-    ("metric_type", _S),
-    ("attributes", _S),
-    ("start_time_unix_nano", _L),
-    ("time_unix_nano", _L),
-    ("value_double", DoubleType()),
-    ("value_int", _L),
-    ("exemplars", _S),
-    ("flags", _L),
+    "metric_name",
+    "metric_type",
+    "attributes",
+    "start_time_unix_nano",
+    "time_unix_nano",
+    "value_double",
+    "value_int",
+    "exemplars",
+    "flags",
     *RESOURCE_KEY_FIELDS,
     *SCOPE_KEY_FIELDS,
 ]
-
-PARSED_SCHEMA = StructType(
-    [
-        StructField("signal_type", _S, True),
-        StructField("error", _S, True),
-        StructField("resources", ArrayType(_struct(RESOURCE_KEY_FIELDS)), True),
-        StructField("scopes", ArrayType(_struct(SCOPE_KEY_FIELDS)), True),
-        StructField("metric_defs", ArrayType(_struct(METRIC_DEF_FIELDS)), True),
-        StructField("spans", ArrayType(_struct(SPAN_FIELDS)), True),
-        StructField("logs", ArrayType(_struct(LOG_FIELDS)), True),
-        StructField("points", ArrayType(_struct(POINT_FIELDS)), True),
-    ]
-)
 
 # Reject reasons (HTTP-status analogues from handlers/handler_common.go).
 REJECT_EMPTY = "empty_body"          # 400, handler_common.go:38-41
@@ -667,7 +644,7 @@ def _extract_point_t(
 # Entry points.
 # ---------------------------------------------------------------------------
 
-# kind -> plural key in the PARSED_SCHEMA dict view
+# kind -> plural key in the ``parse_turn`` dict view
 KIND_PLURALS = {
     "resource": "resources",
     "scope": "scopes",
@@ -677,7 +654,15 @@ KIND_PLURALS = {
     "point": "points",
 }
 
-_EMPTY: dict[str, list] = {p: [] for p in KIND_PLURALS.values()}
+# kind -> the field names of its record tuples
+KIND_FIELDS = {
+    "resource": RESOURCE_KEY_FIELDS,
+    "scope": SCOPE_KEY_FIELDS,
+    "metric_def": METRIC_DEF_FIELDS,
+    "span": SPAN_FIELDS,
+    "log": LOG_FIELDS,
+    "point": POINT_FIELDS,
+}
 
 
 def new_accumulator() -> dict[str, tuple[list, list]]:
@@ -795,27 +780,17 @@ def _dedup_touches(rows: list, idxs: list, n0: int, i: int,
             idxs.extend([i] * len(kept))
 
 
-_KIND_FIELD_NAMES = {
-    "resource": [n for n, _ in RESOURCE_KEY_FIELDS],
-    "scope": [n for n, _ in SCOPE_KEY_FIELDS],
-    "metric_def": [n for n, _ in METRIC_DEF_FIELDS],
-    "span": [n for n, _ in SPAN_FIELDS],
-    "log": [n for n, _ in LOG_FIELDS],
-    "point": [n for n, _ in POINT_FIELDS],
-}
-
-
 def parse_turn(text: str | None, max_bytes: int = 10 * 1024 * 1024,
                n_bytes: int | None = None) -> dict:
-    """Dict-shaped view over ``parse_turn_into`` (the PARSED_SCHEMA
-    contract used by tests, the checkpoint replay and direct callers):
+    """Dict-shaped view over ``parse_turn_into`` (used by tests, the
+    checkpoint replay and direct callers):
     on any error the record arrays are EMPTY (transaction rollback) and
     ``error`` carries the reject reason."""
     acc = new_accumulator()
     signal_type, error = parse_turn_into(text, max_bytes, n_bytes, 0, acc)
     out: dict = {"signal_type": signal_type, "error": error}
     for kind, plural in KIND_PLURALS.items():
-        names = _KIND_FIELD_NAMES[kind]
+        names = KIND_FIELDS[kind]
         out[plural] = [dict(zip(names, t)) for t in acc[kind][0]]
     return out
 
@@ -869,16 +844,14 @@ def extract_span_keys(text: str | None, max_bytes: int = 10 * 1024 * 1024) -> li
 # a 'rec_kind'-discriminated union over all sink columns. This is the
 # shape that survives scale — every column is a scalar, so the Arrow
 # batch -> JVM row conversion is cheap, the in-memory columnar cache
-# and parquet staging both prune to exactly the columns a sink needs,
-# and partition/predicate pushdown on rec_kind replaces repeated scans
-# of a fat nested blob. (Measured on 200k turns/local[32]: the nested
-# variant spent >80% of pipeline wall in nested-row conversion and
-# full-width cache scans.)
+# prunes to exactly the columns a sink needs, and a filter on rec_kind
+# replaces repeated scans of a fat nested blob. (Measured on 200k
+# turns/local[32]: the nested variant spent >80% of pipeline wall in
+# nested-row conversion and full-width cache scans.)
 # ---------------------------------------------------------------------------
 
-RECORD_KINDS = ("turn", "resource", "scope", "metric_def", "span", "log", "point")
-
-_TS = TimestampType()
+_S = StringType()
+_L = LongType()
 _D = DoubleType()
 
 RECORDS_SCHEMA = StructType(
@@ -941,40 +914,3 @@ RECORDS_SCHEMA = StructType(
     ]
 )
 
-RECORD_COLS = [f.name for f in RECORDS_SCHEMA.fields]
-
-
-def turn_records(
-    conv_id: str,
-    turn_idx: int,
-    role: str | None,
-    tool: str | None,
-    ts,
-    text: str | None,
-    max_bytes: int = 10 * 1024 * 1024,
-) -> list[dict]:
-    """Parse one turn and emit its flat union records: exactly one
-    'turn' row (accounting + routing + text-equality surface) plus one
-    row per dimension touch / fact the reference would insert. On a
-    turn-level error only the 'turn' row is emitted (tx rollback)."""
-    p = parse_turn(text, max_bytes)
-    lineage = {
-        "conv_id": conv_id,
-        "turn_idx": turn_idx,
-        "role": role,
-        "tool": tool,
-        "ts_us": ts,
-    }
-    recs: list[dict] = [
-        {
-            **lineage,
-            "rec_kind": "turn",
-            "signal_type": p["signal_type"],
-            "error": p["error"],
-            "text": text,
-        }
-    ]
-    for kind, plural in KIND_PLURALS.items():
-        for r in p[plural]:
-            recs.append({**lineage, "rec_kind": kind, **r})
-    return recs

@@ -11,11 +11,8 @@ Why this shape (scale rationale, measured at 200k-1M turns / local[32]):
  - all output columns are scalars -> the Arrow->JVM row conversion is
    vectorizable, ~6x cheaper than ArrayType(StructType) columns;
  - downstream sinks select ``rec_kind == X`` + their own columns, so
-   the in-memory columnar cache (or parquet staging at 100 TB, where
-   the staging table is partitioned by rec_kind) prunes to exactly the
-   bytes each sink needs instead of re-deserializing a fat blob 7x;
- - the record stream is the natural checkpoint artifact: committed
-   staging partitions ARE the resume lineage.
+   the in-memory columnar cache prunes to exactly the bytes each sink
+   needs instead of re-deserializing a fat blob 7x.
 
 Why ``mapInArrow`` rather than ``mapInPandas`` (measured ~25-30% of the
 stage wall): the kernel is a per-turn Python loop either way, but
@@ -43,31 +40,14 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from sqlite_otel_spark.functions.parse import (
-    LOG_FIELDS,
-    METRIC_DEF_FIELDS,
-    POINT_FIELDS,
-    RECORD_COLS,
+    KIND_FIELDS,
     RECORDS_SCHEMA,
-    RESOURCE_KEY_FIELDS,
-    SCOPE_KEY_FIELDS,
-    SPAN_FIELDS,
     new_accumulator,
     parse_turn_into,
 )
 
 _INPUT_COLS = ("conv_id", "turn_idx", "role", "tool", "ts_us", "text", "nb")
 _LINEAGE = ["conv_id", "turn_idx", "role", "tool", "ts_us"]
-
-# kind -> (parse_turn output key, record-specific columns)
-_KIND_FIELDS = {
-    "resource": ("resources", [n for n, _ in RESOURCE_KEY_FIELDS]),
-    "scope": ("scopes", [n for n, _ in SCOPE_KEY_FIELDS]),
-    "metric_def": ("metric_defs", [n for n, _ in METRIC_DEF_FIELDS]),
-    "span": ("spans", [n for n, _ in SPAN_FIELDS]),
-    "log": ("logs", [n for n, _ in LOG_FIELDS]),
-    "point": ("points", [n for n, _ in POINT_FIELDS]),
-}
-_TURN_COLS = ["signal_type", "error", "text"]
 
 # Spark SQL type -> arrow type for the record stream (all scalars).
 _PA_BY_SPARK = {
@@ -110,8 +90,9 @@ def _batch(kind: str, n: int, cols: dict, schema: pa.Schema) -> pa.RecordBatch:
 def make_kernel(out_schema: pa.Schema, max_text_bytes: int,
                 emit_text: bool):
     """Build the ``mapInArrow`` kernel (batches -> RecordBatches). A
-    module-level factory so scripts/profile_parse.py profiles the REAL
-    hot loop instead of a hand-kept copy (ADVICE r5 #2).
+    module-level factory so the kernel runs without Spark as well:
+    perfbench's ``kernel_turns_per_s`` (and scripts/profile_parse.py on
+    top of it) times this exact hot loop over Arrow batches.
 
     Lineage columns (conv_id/turn_idx/role/tool/ts_us) never pass
     through Python (round 5, profiler-driven): turn rows are 1:1 with
@@ -154,7 +135,7 @@ def make_kernel(out_schema: pa.Schema, max_text_bytes: int,
             else:
                 turn_cols["n_bytes"] = col["nb"]
             yield _batch("turn", rb.num_rows, turn_cols, out_schema)
-            for kind, (_, fields) in _KIND_FIELDS.items():
+            for kind, fields in KIND_FIELDS.items():
                 rows, ix = acc[kind]
                 if not rows:
                     continue

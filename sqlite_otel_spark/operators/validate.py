@@ -1,21 +1,19 @@
-"""F1-F6: native validation predicates (SURVEY §2.2).
+"""F3/F4: native validation predicates (SURVEY §2.2).
 
-These are the reference's admission checks re-expressed as Catalyst
-column predicates so they participate in predicate pushdown / whole-stage
-codegen. In the main pipeline the same checks are fused into the parse
-UDF's short-circuit path (one scan); these standalone operators exist
-for (a) the optional pre-filter stage, (b) the oracle-checked queries()
-entries that demonstrate each predicate in isolation.
+Two of the reference's admission checks re-expressed as Catalyst column
+predicates, so they take part in predicate pushdown and whole-stage
+codegen. The pipeline does not call them: all of F1-F6 run fused in
+the parse kernel's short-circuit path (operators/records.py), in one
+scan. These operators back the queries() entries that check each
+predicate in isolation against its oracle (f3, f4).
 
-Reference: method filter handlers/handler_common.go:15-18 (F1),
-content-type prefix :21-26 (F2), 10 MB cap :28-31 (F3), empty body
-:37-41 (F4), envelope presence database/*.go:17-25 (F5), required
-fields database/traces.go:92-100 / database/metrics.go:97-100 (F6).
+Reference: 10 MB cap handlers/handler_common.go:28-31 (F3), empty body
+:37-41 (F4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -27,37 +25,3 @@ def non_empty_text(col: str = "text") -> Column:
 def within_size_limit(max_bytes: int, col: str = "text") -> Column:
     """F3: DoS guard, byte length (octet_length ≙ MaxBytesReader cap)."""
     return F.octet_length(F.col(col)) <= F.lit(max_bytes)
-
-
-def looks_like_json_object(col: str = "text") -> Column:
-    """F2 analogue: prefix predicate (the graft's content-type check) —
-    the turn must carry a JSON object."""
-    return F.startswith(F.ltrim(F.col(col)), F.lit("{"))
-
-
-def signal_discriminator(col: str = "text") -> Column:
-    """R1 routing hint computed natively (cheap contains probe; the parse
-    UDF computes the authoritative signal from the decoded envelope).
-    Mirrors endpoint dispatch main.go:119-121."""
-    c = F.col(col)
-    return (
-        F.when(c.contains('"resourceSpans"'), F.lit("trace"))
-        .when(c.contains('"resourceLogs"'), F.lit("log"))
-        .when(c.contains('"resourceMetrics"'), F.lit("metric"))
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-
-def prefilter(df: DataFrame, max_bytes: int) -> tuple[DataFrame, DataFrame]:
-    """Split (admitted, quarantined) with native predicates only.
-    Early-fail ordering matches handler_common.go:15-45."""
-    reason = (
-        F.when(~non_empty_text(), F.lit("empty_body"))
-        .when(~within_size_limit(max_bytes), F.lit("oversize"))
-        .when(~looks_like_json_object(), F.lit("not_json_object"))
-    )
-    tagged = df.withColumn("reject_reason", reason)
-    return (
-        tagged.filter(F.col("reject_reason").isNull()).drop("reject_reason"),
-        tagged.filter(F.col("reject_reason").isNotNull()),
-    )

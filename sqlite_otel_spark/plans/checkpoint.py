@@ -58,6 +58,7 @@ from sqlite_otel_spark.plans.pipeline import (
     FACT_TABLES,
     emit_sinks,
     parse_records,
+    read_parquet_if_exists,
     write_frames,
 )
 
@@ -220,15 +221,15 @@ def _write_manifest_row(spark, out_dir, bucket, run_id, counts) -> None:
 
 
 def read_manifest_buckets(spark, out_dir) -> set[int]:
-    try:
-        return {r.bucket for r in read_manifest(spark, out_dir).collect()}
-    except Exception:
-        return set()
+    """Committed buckets; empty only while no manifest row exists."""
+    manifest = read_manifest(spark, out_dir)
+    return set() if manifest is None else {r.bucket for r in manifest.collect()}
 
 
-def read_manifest(spark, out_dir) -> DataFrame:
-    return spark.read.option("recursiveFileLookup", "true").parquet(
-        f"{out_dir}/_manifest"
+def read_manifest(spark, out_dir) -> DataFrame | None:
+    """The manifest rows, or None before the first bucket commits."""
+    return read_parquet_if_exists(
+        spark.read.option("recursiveFileLookup", "true"), f"{out_dir}/_manifest"
     )
 
 

@@ -8,7 +8,7 @@ and streaming (streaming/stream.py) share that step too:
     parse_records    Arrow mapInArrow parse (P1-P11, F1-F7, one Python
                      pass emitting the flat record stream,
                      operators/records.py) + surrogate ids on the stream
-    [persist/stage]  the caller materializes the stream once (R1)
+    [persist]        the caller materializes the stream once (R1)
     invalid turns    bounded, local (conv_id, turn_idx) relation from the
                      spans-PK cascade (operators/conflicts.py)
     emit_sinks       spans / log_records / metric_data_points / rejects +
@@ -39,7 +39,8 @@ from dataclasses import dataclass, field
 from functools import partial
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, DataFrameReader, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -84,16 +85,19 @@ class PipelineResult:
             df.unpersist()
 
 
-def salted_repartition(df: DataFrame, cfg: PipelineConfig,
-                       n_partitions: int | None = None) -> DataFrame:
+# Salt range for hot conversations (north_rule; SURVEY §4.2.1).
+SALT_BUCKETS = 8
+
+
+def salted_repartition(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
     """North-rule §4.2.1: hot conversations (10%+ of turns in one conv_id
     in the fixture) would pin a partition if the input arrived clustered
     by conversation. Repartitioning on (conv_id, salt(turn_idx)) spreads
-    each hot conversation over ``salt_buckets`` partitions while keeping
+    each hot conversation over ``SALT_BUCKETS`` partitions while keeping
     unrelated conversations hashed apart. Parse is embarrassingly
     parallel, so no de-salting is ever needed — downstream wide ops
     shuffle on their own keys."""
-    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(cfg.salt_buckets))
+    salt = F.pmod(F.xxhash64("turn_idx"), F.lit(SALT_BUCKETS))
     if n_partitions:
         return df.repartition(n_partitions, F.col("conv_id"), salt)
     return df.repartition(F.col("conv_id"), salt)
@@ -153,7 +157,7 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     mode = cfg.surrogate_id_mode
 
-    src = salted_repartition(transcripts, cfg, repartition_to) if do_salt else transcripts
+    src = salted_repartition(transcripts, repartition_to) if do_salt else transcripts
 
     records_all = parse_records(src, cfg, mode)
     # One materialization shared by the reject sink, the conflict pass and
@@ -161,18 +165,7 @@ def run_pipeline(
     # The flat schema means each downstream scan prunes to its own columns;
     # enrich_record_ids already swapped the fat dim-key strings on fact
     # rows for 8-byte surrogate ids before anything lands in the cache.
-    persisted = []
-    if cfg.staging_dir:
-        # 100 TB form: stage the stream as parquet partitioned by
-        # rec_kind — per-sink reads partition-prune to their kind, and
-        # executor memory never holds the corpus.
-        records_all.write.mode("overwrite").partitionBy("rec_kind").option(
-            "compression", cfg.compression
-        ).parquet(cfg.staging_dir)
-        records_all = spark.read.parquet(cfg.staging_dir)
-    else:
-        records_all = records_all.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(records_all)
+    records_all = records_all.persist(StorageLevel.MEMORY_AND_DISK)
 
     invalid_turns, n_invalid = resolve_span_conflicts(
         spark, records_all, cfg.max_conflict_turns
@@ -192,7 +185,7 @@ def run_pipeline(
         by_signal_tool=agg.counts_by_signal_tool(routed_enriched),
         by_time_bucket=agg.counts_by_time_bucket(routed_enriched),
         n_conflict_invalid=n_invalid,
-        persisted=persisted,
+        persisted=[records_all],
     )
 
 
@@ -233,6 +226,20 @@ def derive_max_records_per_file(
                    compression=pa_codec)
     bytes_per_row = max(1.0, buf.tell() / len(sample))
     return max(1, int(target_bytes / bytes_per_row))
+
+
+def read_parquet_if_exists(reader: DataFrameReader, path: str) -> DataFrame | None:
+    """``reader.parquet(path)``, or None when ``path`` does not exist
+    (nothing committed there yet). Every other read error — an
+    unreadable file, a storage failure — propagates: reading it as
+    "empty" would skip the checks and bookkeeping built on the committed
+    data."""
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
 
 
 def _is_catalog_missing(e: Exception) -> bool:

@@ -1773,8 +1773,10 @@ def dp_frame_sample(spark, sf_dir):
 )
 def s6_health_check(spark, sf_dir):
     """S6: the GET /health probe analogue (main.go:124-137) — proves the
-    session schedules a trivial job and the source contract (the
-    BASELINE.json input_hint's six columns) resolves."""
+    session schedules a trivial job (``health_check``: SELECT 1) and
+    reports the column count of the constant source contract
+    (``TRANSCRIPT_SCHEMA``, the BASELINE.json input_hint's six columns).
+    No source is read or resolved."""
     from sqlite_otel_spark.sources.transcripts import (
         TRANSCRIPT_SCHEMA as SRC_SCHEMA,
         health_check,

@@ -39,8 +39,7 @@ def get_spark(
         # The record-stream cache is write-once/read-few within a run;
         # per-column compression costs ~15% of the whole pipeline wall
         # (measured, text-heavy columns) for little benefit at
-        # micro-batch scale. At 100 TB the staging_dir parquet path
-        # replaces the cache entirely.
+        # micro-batch scale.
         "spark.sql.inMemoryColumnarStorage.compressed": "false",
         # Kryo for block/broadcast/spill (de)serialization: the default
         # JavaSerializer builds deeply recursive object graphs when

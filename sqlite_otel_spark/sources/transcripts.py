@@ -57,5 +57,6 @@ def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
 
 def health_check(spark: SparkSession) -> bool:
     """S6: the GET /health probe analogue (main.go:124-137) — a trivial
-    job proving the session schedules work."""
+    ``SELECT 1`` job proving the session schedules work. It reads no
+    source: reachability of the transcripts table is not checked."""
     return spark.sql("SELECT 1 AS ok").collect()[0].ok == 1

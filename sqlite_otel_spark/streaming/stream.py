@@ -41,7 +41,12 @@ from sqlite_otel_spark.operators.conflicts import (
     invalid_relation,
 )
 from sqlite_otel_spark.operators.dims import DIM_TOUCH_TABLES, fold_dims
-from sqlite_otel_spark.plans.pipeline import emit_sinks, parse_records, write_frames
+from sqlite_otel_spark.plans.pipeline import (
+    emit_sinks,
+    parse_records,
+    read_parquet_if_exists,
+    write_frames,
+)
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -52,14 +57,18 @@ def _clash_turns(spark: SparkSession, records: DataFrame, out_dir: str,
                  max_conflict_turns: int) -> list[tuple]:
     """Turns of this batch carrying a span key an earlier batch
     committed (one scan of the committed spans)."""
-    try:
-        committed = spark.read.parquet(f"{out_dir}/spans").select("trace_id", "span_id")
-    except Exception:  # no batch has committed spans yet
+    # the schema is given, not inferred: a spans/ directory without data
+    # files (a day-partitioned append of a batch with no spans) reads as
+    # empty instead of failing schema inference
+    committed = read_parquet_if_exists(
+        spark.read.schema("trace_id string, span_id string"), f"{out_dir}/spans"
+    )
+    if committed is None:  # no batch has committed spans yet
         return []
     clash = (
         records.filter(F.col("rec_kind") == "span")
         .select("conv_id", "turn_idx", "trace_id", "span_id")
-        .join(committed, ["trace_id", "span_id"], "leftsemi")
+        .join(committed.select("trace_id", "span_id"), ["trace_id", "span_id"], "leftsemi")
         .select("conv_id", "turn_idx").distinct()
     )
     return [tuple(r) for r in collect_bounded(clash, max_conflict_turns, "turns")]

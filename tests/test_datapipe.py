@@ -924,27 +924,6 @@ def test_ngrams_and_repetition(spark):
     assert rows[3].dup_trigram_frac == 0.5
 
 
-def test_line_repetition(spark):
-    from sqlite_otel_spark.datapipe import text as dtx
-    df = spark.createDataFrame(
-        [(1, "aaaa\nbb\naaaa\n\ncc"),  # dup 'aaaa' x2; empty line dropped
-         (2, "solo line"),
-         (3, "")],
-        "doc_id int, text string",
-    )
-    cols = dtx.line_repetition_cols(F.col("text"))
-    rows = {r.doc_id: r for r in df.select(
-        "doc_id", *[c.alias(k) for k, c in cols.items()]).collect()}
-    assert rows[1].n_lines == 4
-    assert rows[1].dup_line_frac == 0.25          # 4 lines, 3 distinct
-    assert abs(rows[1].dup_line_char_frac - 8 / 12) < 1e-12
-    assert rows[2].n_lines == 1
-    assert rows[2].dup_line_frac == 0.0
-    assert rows[2].dup_line_char_frac == 0.0
-    assert rows[3].n_lines == 0
-    assert rows[3].dup_line_frac == 0.0
-
-
 def test_contamination_flags(spark):
     from sqlite_otel_spark.datapipe import text as dtx
     docs = spark.createDataFrame(
@@ -1068,18 +1047,6 @@ def test_minhash_inline_matches_grouped(spark, docs):
         a = dd.minhash_signatures(sh, 16, hash_fn=hf).orderBy(
             "doc_id").collect()
         b = dd.minhash_signatures_inline(docs, 16, n=3, hash_fn=hf).orderBy(
-            "doc_id").collect()
-        assert a == b, hf
-
-
-def test_simhash_inline_matches_grouped(spark, docs):
-    """The shuffle-free within-row SimHash must be value-identical to
-    the explode+groupBy bit-sum form, in BOTH hash families."""
-    from sqlite_otel_spark.datapipe import dedup as dd
-    for hf, bits in (("md5", 60), ("xxhash64", 64)):
-        a = dd.simhash(docs, n_bits=bits, hash_fn=hf).orderBy(
-            "doc_id").collect()
-        b = dd.simhash_inline(docs, n_bits=bits, hash_fn=hf).orderBy(
             "doc_id").collect()
         assert a == b, hf
 

@@ -1,8 +1,8 @@
 """Per-operator unit tests for the parse stage's edge semantics
 (SURVEY §5.2: one test per §2 operator ID; §7 risk (a) — encode each
 edge-case divergence as a unit test). Pure Python: parse_turn /
-canonical_dumps / turn_records, cross-checked against the independent
-sequential oracle where both define the behavior.
+canonical_dumps and the Arrow parse kernel, cross-checked against the
+independent sequential oracle where both define the behavior.
 
 Reference citations per case are in the assertions' comments.
 """
@@ -19,7 +19,6 @@ from sqlite_otel_spark.functions.parse import (
     REJECT_OVERSIZE,
     REJECT_UNKNOWN_SIGNAL,
     parse_turn,
-    turn_records,
 )
 from sqlite_otel_spark.oracle import OracleDB
 
@@ -371,17 +370,31 @@ def test_parse_agrees_with_oracle_on_fixture_edges():
 
 
 # --------------------------------------------------------------------------
-# turn_records emission shape
+# record emission shape: the mapInArrow kernel over one Arrow batch
 # --------------------------------------------------------------------------
 
 def test_turn_records_emission():
-    recs = turn_records("c", 1, "user", "bash", 12345, trace(RS))
-    kinds = [r["rec_kind"] for r in recs]
-    assert kinds[0] == "turn"
+    import pyarrow as pa
+
+    from sqlite_otel_spark.operators.records import _pa_schema, make_kernel
+
+    texts = [trace(RS), "not json"]
+    batch = pa.RecordBatch.from_pydict({
+        "conv_id": ["c", "c"], "turn_idx": pa.array([1, 2], pa.int32()),
+        "role": ["user", "user"], "tool": ["bash", "bash"],
+        "ts_us": pa.array([12345, 12345], pa.int64()), "text": texts,
+        "nb": pa.array([len(t.encode()) for t in texts], pa.int64()),
+    })
+    gen = make_kernel(_pa_schema(extra_n_bytes=False), 10 * 1024 * 1024, True)
+    recs = pa.Table.from_batches(list(gen(iter([batch])))).to_pylist()
+    # one 'turn' row per input row, whatever the outcome
+    turns = {r["turn_idx"]: r for r in recs if r["rec_kind"] == "turn"}
+    assert sorted(turns) == [1, 2]
+    assert turns[1]["signal_type"] == "trace" and turns[1]["error"] is None
+    assert turns[1]["text"] == texts[0]
+    kinds = [r["rec_kind"] for r in recs if r["turn_idx"] == 1]
     assert kinds.count("span") == 1 and kinds.count("resource") == 1
-    turn = recs[0]
-    assert turn["signal_type"] == "trace" and turn["error"] is None
-    assert all(r["conv_id"] == "c" and r["turn_idx"] == 1 for r in recs)
+    assert all(r["conv_id"] == "c" and r["ts_us"] == 12345 for r in recs)
     # rejected turn -> only the turn row (tx rollback)
-    bad = turn_records("c", 2, "user", "bash", 12345, "not json")
-    assert len(bad) == 1 and bad[0]["error"] == REJECT_NOT_JSON
+    assert [r["rec_kind"] for r in recs if r["turn_idx"] == 2] == ["turn"]
+    assert turns[2]["error"] == REJECT_NOT_JSON

@@ -240,25 +240,3 @@ def test_emit_text_off_preserves_counts(spark):
         r_on.unpersist()
         r_off.unpersist()
 
-
-def test_staging_mode_matches_persist_mode(spark, tmp_path):
-    """cfg.staging_dir stages the record stream as parquet partitioned by
-    rec_kind (the bounded-memory 100 TB form) instead of caching — every
-    sink and aggregate must be identical to the in-memory path."""
-    rows = _rows()
-    r_mem = run_pipeline(spark, transcripts_df(spark, rows),
-                         PipelineConfig(max_text_bytes=MAX_BYTES))
-    r_stg = run_pipeline(
-        spark, transcripts_df(spark, rows),
-        PipelineConfig(max_text_bytes=MAX_BYTES, staging_dir=str(tmp_path / "stg")),
-    )
-    try:
-        assert {n: d.count() for n, d in r_mem.sinks.items()} == {
-            n: d.count() for n, d in r_stg.sinks.items()
-        }
-        got_m = sorted(map(tuple, r_mem.sinks["spans"].collect()), key=str)
-        got_s = sorted(map(tuple, r_stg.sinks["spans"].collect()), key=str)
-        assert got_m == got_s
-    finally:
-        r_mem.unpersist()
-        r_stg.unpersist()

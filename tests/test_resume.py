@@ -2,6 +2,8 @@
 reprocessing committed buckets, and the resumed output equals both a
 clean one-shot run and the sequential oracle."""
 
+import os
+
 import pytest
 
 from sqlite_otel_spark.config import PipelineConfig
@@ -64,3 +66,23 @@ def test_resume_is_idempotent(spark, rows, tmp_path_factory):
     assert again["processed"] == []
     assert len(again["skipped"]) == 6
     assert sorted(r.bucket for r in cp.read_manifest(spark, out).collect()) == list(range(6))
+
+
+def test_unreadable_manifest_stops_resume(spark, rows, tmp_path_factory):
+    """Only a missing _manifest means "nothing committed yet": a manifest
+    that cannot be read must stop the resume, not reprocess every
+    committed bucket."""
+    out = str(tmp_path_factory.mktemp("ckpt3"))
+    df = transcripts_df(spark, rows)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        cp.run_checkpointed(spark, df, out, _cfg(), run_id="r1", fail_after_buckets=1)
+    manifest = os.path.join(out, "_manifest", "bucket_0")
+    parts = [n for n in os.listdir(manifest) if n.endswith(".parquet")]
+    assert parts
+    for name in parts:
+        with open(os.path.join(manifest, name), "wb") as f:
+            f.write(b"not parquet")
+
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        cp.run_checkpointed(spark, df, out, _cfg(), run_id="r2")
+    assert sorted(os.listdir(os.path.join(out, "_manifest"))) == ["bucket_0"]

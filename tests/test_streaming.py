@@ -5,6 +5,7 @@ PK state is comparable), plus a watermarked windowed aggregate."""
 
 import pyarrow as pa
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from sqlite_otel_spark.config import PipelineConfig
@@ -48,6 +49,43 @@ def test_stream_matches_oracle(spark, stream_dirs):
     # per-record span equality (hash ids aside)
     got = {(r.trace_id, r.span_id) for r in spark.read.parquet(f"{out_dir}/spans").collect()}
     assert got == set(oracle.spans)
+
+
+def test_unreadable_committed_spans_fail_the_batch(spark, tmp_path):
+    """Only a missing spans/ directory means "nothing committed yet": a
+    committed file that cannot be read must fail the micro-batch, not
+    commit it without the cross-batch spans-PK check."""
+    input_dir, out_dir = tmp_path / "in", tmp_path / "out"
+    input_dir.mkdir()
+    (out_dir / "spans").mkdir(parents=True)
+    (out_dir / "spans" / "part-0.parquet").write_bytes(b"not parquet")
+    write_part(pa.Table.from_pylist(make_transcripts(60, seed=5), schema=ARROW_SCHEMA),
+               str(input_dir / "part-000.parquet"), 0)
+    q = st.start_stream(spark, str(input_dir), str(out_dir), PipelineConfig())
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(300)
+    assert sorted(p.name for p in out_dir.iterdir()) == ["_stream_checkpoint", "spans"]
+    assert [p.name for p in (out_dir / "spans").iterdir()] == ["part-0.parquet"]
+
+
+def test_spans_dir_without_data_files_is_empty(spark, tmp_path):
+    """A day-partitioned append of a batch with no spans leaves spans/
+    without data files; the next batch reads it as nothing committed."""
+    rows = sorted(make_transcripts(200, seed=13), key=lambda r: (r["conv_id"], r["turn_idx"]))
+    no_spans = [r for r in rows if '"resourceSpans"' not in (r["text"] or "")]
+    with_spans = [r for r in rows if '"resourceSpans"' in (r["text"] or "")]
+    input_dir, out_dir = tmp_path / "in", str(tmp_path / "out")
+    input_dir.mkdir()
+    for i, chunk in enumerate([no_spans, with_spans]):
+        write_part(pa.Table.from_pylist(chunk, schema=ARROW_SCHEMA),
+                   str(input_dir / f"part-{i:03d}.parquet"), i)
+    q = st.start_stream(spark, str(input_dir), out_dir,
+                        PipelineConfig(partition_facts_by_day=True))
+    q.awaitTermination(300)
+    assert q.exception() is None
+    want = OracleDB().run(no_spans + with_spans).sink_counts()["spans"]
+    assert want > 0
+    assert spark.read.parquet(f"{out_dir}/spans").count() == want
 
 
 def test_max_bytes_per_trigger_admission(spark, stream_dirs, tmp_path):
